@@ -1,7 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.config.Schemas
 import graft.ddl.Tables
 import graft.load.Loader
@@ -32,18 +31,8 @@ object BenchMain {
     }
 
   def main(args: Array[String]): Unit = {
-    val cpus = env("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("graft-bench", LocalSession.cpus)
     graft.plans.CheapFirstFilterOrder.install(spark)
-    spark.sparkContext.setLogLevel("WARN")
 
     val cfg0 = env("SCHEMA_KIND", "wide") match {
       case "narrow" => Schemas.narrowOrders

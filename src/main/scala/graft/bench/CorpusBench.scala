@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.operators.{ConnectedComponents, Contamination, Dedup, Rank, Similarity, TextOps, ZOrder}
 
 /** Corpus-scale benchmark for the LLM-pipeline operators (minhash, ngram
@@ -273,7 +274,7 @@ object CorpusBench {
 
   def main(args: Array[String]): Unit = {
     val sizes = sys.env.getOrElse("CORPUS_DOCS", "50000").split(",").map(_.trim.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     val stageDir = sys.env.getOrElse("CORPUS_DIR", "/tmp/graft_corpus")
     val outPath = sys.env.getOrElse("CORPUS_OUT", "docs/corpusbench_local32.jsonl")
     val warmup = sys.env.getOrElse("BENCH_WARMUP", "1").toInt
@@ -284,19 +285,14 @@ object CorpusBench {
     // 256) — the state sits in the map-side PARTIAL aggregate, whose
     // total per-JVM size is cardinality-bound; on a real cluster that
     // state divides across executors, not partitions
-    val shuffleParts = sys.env.getOrElse("SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corpusbench")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val shuffleParts = sys.env.getOrElse("SHUFFLE_PARTS", cpus.toString)
+    val spark = LocalSession("graft-corpusbench", cpus,
+      "spark.sql.shuffle.partitions" -> shuffleParts,
       // the vector-attach broadcast (Similarity.scoredCandidates, raised
       // 2 GB gate) collects the vector table through the driver; the 1 GB
       // maxResultSize default aborts that collect at 5M × 64d (1.8 GB)
       // even though the 8 GB heap holds it comfortably
-      .config("spark.driver.maxResultSize", "4g")
+      "spark.driver.maxResultSize" -> "4g",
       // scan split size bounds the map side of the first exchange: a
       // 128 MB split explodes/ships ~2× its bytes through the shuffle
       // writer, over a task's execution-memory share at 32 concurrent
@@ -304,9 +300,7 @@ object CorpusBench {
       // the 5M-doc widen exchange). 32 MB splits keep map output inside
       // the share at any corpus size; at cluster scale the same knob is
       // per-executor-memory, not per-corpus.
-      .config("spark.sql.files.maxPartitionBytes", String.valueOf(32L << 20))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.files.maxPartitionBytes" -> String.valueOf(32L << 20))
     // declared pair budget for the pair-MATERIALIZING editdist path: on
     // this host set it to ~free-disk/48 B so a saturated corpus records a
     // typed SaturationBudgetExceeded row with the arithmetic instead of an

@@ -1,6 +1,6 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Operational CLI for the persistent k-NN index
   * ([[graft.operators.KnnIndex]]) — the maintenance face a table's
@@ -26,14 +26,7 @@ object IndexMaint {
     require(args.length >= 2,
       "usage: IndexMaint <indexPath> stats|compact [nLists] | build <embParquet> [nLists]")
     val (path, cmd) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-indexmaint")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-indexmaint", LocalSession.cpus)
     cmd match {
       case "stats" =>
         graft.operators.KnnIndex.stats(spark, path).show(false)

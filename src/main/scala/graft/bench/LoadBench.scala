@@ -3,8 +3,7 @@ package graft.bench
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSession
 import graft.config.Schemas
 import graft.load.Loader
 import graft.measure.Sizes
@@ -48,16 +47,9 @@ object LoadBench {
     val outPath = sys.env.getOrElse("LOADBENCH_OUT", "docs/loadbench_local32.jsonl")
     val wh = sys.env.getOrElse("WAREHOUSE", "/tmp/graft_loadbench")
     val keep = sys.env.get("LOAD_KEEP").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-loadbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-loadbench", cpus)
 
     val out = Paths.get(outPath)
     if (out.getParent != null) Files.createDirectories(out.getParent)

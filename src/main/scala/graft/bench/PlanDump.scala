@@ -2,9 +2,7 @@ package graft.bench
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 
 /** Dumps `.explain("formatted")` for declared queries to one file per query —
   * the plan evidence the optimization rounds commit under `plans/rNN/`.
@@ -16,7 +14,8 @@ import graft.SparkEntry
   *   - `q...`: query names; default = the Bench headline set
   *
   * Session config matches [[graft.Bench]] (same master/shuffle-partition/AQE
-  * settings) so the dumped plan is the benched plan. AQE plans print
+  * settings, see [[graft.LocalSession]]) so under the same
+  * `SPARK_GRAFT_CPUS` the dumped plan is the benched plan. AQE plans print
   * `isFinalPlan=false` — this is the static plan before runtime
   * re-optimization; exchange counts and join strategies are decided here.
   */
@@ -25,7 +24,6 @@ object PlanDump {
     val outDir = args.headOption.getOrElse("plans/r15")
     val suffix = if (args.length > 1) args(1) else ""
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names: Seq[String] =
       if (args.length > 2) args.drop(2).toSeq
       else Seq(
@@ -33,15 +31,7 @@ object PlanDump {
         "q05_count_composite", "q06_select_limit", "q07_join_agg", "q10_window_topn",
         "q13_topk", "q15_dedup_exact", "q16_token_stats", "q18_langid", "q20_sessionize",
         "q21_minhash_pairs", "q23_ngram_pairs", "q24_cosine_topk", "q36_tfidf", "q37_bm25")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("graft-plandump", LocalSession.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.filter(SparkEntry.queries.contains).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

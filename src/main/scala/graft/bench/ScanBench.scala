@@ -1,8 +1,9 @@
 package graft.bench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.LocalSession
 import graft.config.Schemas
 import graft.ddl.Tables
 import graft.load.Loader
@@ -22,20 +23,12 @@ object ScanBench {
   def env(k: String, d: String): String = sys.env.getOrElse(k, d)
 
   def main(args: Array[String]): Unit = {
-    val cpus = env("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scanbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession("graft-scanbench", cpus,
       // a LIMIT with a selective predicate otherwise scans 1 → 4 → 16 …
       // partitions in sequential waves with idle cores
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .getOrCreate()
+      "spark.sql.limit.initialNumPartitions" -> cpus.toString)
     graft.plans.CheapFirstFilterOrder.install(spark)
-    spark.sparkContext.setLogLevel("ERROR")
 
     val rows = env("SCAN_ROWS", "10000000").toLong
     val warehouse = env("WAREHOUSE", "/tmp/graft_scan")

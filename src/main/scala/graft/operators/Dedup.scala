@@ -78,7 +78,7 @@ object Dedup {
     * ROUTE rows, they never decide equality:
     *
     *  1. one skinny aggregate over `(id, hk = xxhash64(keys))` — the
-    *     exchange carries 24 B/row instead of the text;
+    *     exchange carries ~23 B/row on the wire instead of the text;
     *  2. an hk group of size 1 proves its key occurs exactly once
     *     globally (equal keys always share hk), so it emits
     *     `(its id, 1)` with no text ever shuffled;
@@ -94,8 +94,8 @@ object Dedup {
     * duplicated, so candidate refetch approaches a full re-shuffle — the
     * classic single-exchange shape is the better plan and is kept.
     * Measured at the 5M-doc grid corpus: the pre-verdict exchange drops
-    * from the per-split-distinct TEXT stream to 16 B/row slim rows (see
-    * docs/bench_r16_notes.md for the shuffle-bytes delta). Small inputs
+    * from the per-split-distinct TEXT stream to slim rows, 113.8 MB over
+    * 5M rows ≈ 23 B/row on the wire (docs/bench_r16_notes.md). Small inputs
     * (including every driver SF) keep the classic plan bit-for-bit. */
   def exactCounts(df: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
     val minBytes = df.sparkSession.conf

@@ -46,16 +46,33 @@ class OperatorsSpec extends SparkSpec {
     val df = spark.read.parquet(tmp)
     def canon(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val classic = canon(
-      Dedup.exact(df, "id", Seq("t")).select($"keep_id", $"n_copies").collect())
+    // columns leaving the first exchanges over the input: the shuffle
+    // exchanges of the executed (final, post-AQE) plan with no exchange
+    // below them
+    def firstExchangeCols(ran: org.apache.spark.sql.DataFrame): Set[String] = {
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+      val h = new AdaptiveSparkPlanHelper {}
+      val first = h.collect(ran.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if h.collect(e.child) { case x: Exchange => x }.isEmpty => e
+      }
+      assert(first.nonEmpty, "no shuffle exchange in the plan")
+      first.flatMap(_.output.map(_.name)).toSet
+    }
+    val classicDf = Dedup.exact(df, "id", Seq("t")).select($"keep_id", $"n_copies")
+    val classic = canon(classicDf.collect())
+    // the classic plan's first exchange is keyed by the text itself
+    assert(firstExchangeCols(classicDf).contains("t"))
     // force the slim path regardless of file size
     spark.conf.set("spark.graft.exactSlim.minBytes", "0")
     try {
       val slim = Dedup.exactCounts(df, "id", Seq("t"))
-      // the slim plan's first exchange must not carry the key column
-      val p = slim.queryExecution.executedPlan.toString
       assert(canon(slim.collect()) == classic,
         "slim exactCounts diverged from the classic plan")
+      // the slim plan's first exchange must not carry the key column
+      assert(!firstExchangeCols(slim).contains("t"),
+        "slim exactCounts shuffles the key column before the hash aggregate")
       assert(classic == Seq((1L, 3L), (3L, 2L), (7L, 1L), (9L, 1L)))
       // and the broadcast-cap fallback is still the classic result
       spark.conf.set("spark.graft.exactSlim.maxBroadcastKeys", "0")
